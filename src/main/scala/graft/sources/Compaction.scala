@@ -33,8 +33,8 @@ object Compaction {
 
   case class CompactionPlan(nFiles: Long, nBytes: Long, nOut: Int)
 
-  /** One recursive listing; counts only data files (parquet parts),
-    * not markers/checksums. */
+  /** One driver-side listing ([[ParquetDir.leafFiles]]); counts only
+    * data files (parquet parts), not markers/checksums. */
   def plan(spark: SparkSession, dir: String,
       targetBytes: Long = 128L * 1024 * 1024): CompactionPlan =
     planAll(spark, Seq(dir), targetBytes)
@@ -45,24 +45,19 @@ object Compaction {
   def planAll(spark: SparkSession, dirs: Seq[String],
       targetBytes: Long = 128L * 1024 * 1024): CompactionPlan = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    var n = 0L; var bytes = 0L
-    for (dir <- dirs) {
+    val files = dirs.flatMap { dir =>
       val p = new Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.getPath.getName.endsWith(".parquet")) {
-          n += 1; bytes += f.getLen
-        }
-      }
-    }
+      ParquetDir.leafFiles(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    }.filter(_.getPath.getName.endsWith(".parquet"))
+    val n = files.size.toLong
+    val bytes = files.map(_.getLen).sum
     // capped at the source file count: compaction MERGES small files;
     // a byte-derived plan larger than the input (one 1 GB file at a
     // 128 MB target) would otherwise SPLIT it — that's a repartition
     // layout decision, not compaction's job, and it would break the
     // "cannot increase the file count" guarantee below
-    val nOut = math.min(math.max(1L, n.toLong),
+    val nOut = math.min(math.max(1L, n),
       math.max(1L, (bytes + targetBytes - 1) / targetBytes))
     CompactionPlan(n, bytes, nOut.toInt)
   }

@@ -27,6 +27,17 @@ import graft.index.Sharding
   * previous version stays intact (a plain overwrite deletes the only
   * copy of prior state before the new one is durable). The two most
   * recent good versions are kept; older ones are pruned best-effort.
+  *
+  * Cost model. Opening a version ([[loadSnapshot]], the `load*`
+  * calls and the probes built on them) is one driver-side listing
+  * plus one parquet footer read, and starts no Spark job
+  * ([[ParquetDir.open]]); a version never changes after its
+  * `_SUCCESS`, so that listing stays valid for the frame's life. A
+  * save clusters rows by their partition columns first, so it writes
+  * one file per partition directory at this size (AQE splits a
+  * skewed partition into several), not one per upstream task. A save
+  * of an empty frame records its schema, so the empty version opens
+  * as an empty frame with the usual columns.
   */
 object GraphStore {
 
@@ -69,10 +80,6 @@ object GraphStore {
         dir
       }
   }
-
-  private def resolve(spark: SparkSession, root: String,
-      table: String): String =
-    resolveWith(spark, currentEpoch(spark, root), root, table)
 
   /** The root epoch: table → pinned version. Written atomically by
     * [[commitEpoch]] AFTER all of a batch's table saves, so readers
@@ -238,29 +245,41 @@ object GraphStore {
   def saveNodes(nodes: DataFrame, root: String, shardBits: Int = 6,
       publish: Boolean = true): String =
     versionedSave(nodes, root, "nodes", publish) { (df, path) =>
-      df.withColumn("shard", Sharding.shardOfId(col("id"), shardBits))
-        .write.mode("overwrite").partitionBy("shard").parquet(path)
+      writePartitioned(df.withColumn("shard",
+        Sharding.shardOfId(col("id"), shardBits).cast("int")), path, "shard")
     }
 
   def saveEdges(edges: DataFrame, root: String, shardBits: Int = 6,
       publish: Boolean = true): String =
     versionedSave(edges, root, "edges", publish) { (df, path) =>
-      df.withColumn("shard", Sharding.shardOfKey(col("src_key"), shardBits))
-        .write.mode("overwrite").partitionBy("shard").parquet(path)
+      writePartitioned(df.withColumn("shard",
+        Sharding.shardOfKey(col("src_key"), shardBits).cast("int")), path,
+        "shard")
     }
 
   def saveIndexes(indexes: DataFrame, root: String,
       publish: Boolean = true): String =
     versionedSave(indexes, root, "indexes", publish) { (df, path) =>
-      df
+      writePartitioned(df
         // typed shadow column: numeric range probes push a native
         // double predicate to the scan (a range over the string
         // key_str cannot push, and parquet min/max stats on key_num
         // skip whole row groups)
-        .withColumn("key_num", col("key_str").try_cast("double"))
-        .write.mode("overwrite")
-        .partitionBy("index_name", "key_type").parquet(path)
+        .withColumn("key_num", col("key_str").try_cast("double")),
+        path, "index_name", "key_type")
     }
+
+  /** Partitioned write with rows clustered by their partition columns
+    * first (the `rebalance` hint), so each partition directory gets
+    * one file instead of one per upstream task; AQE still splits a
+    * skewed partition into several. The shard column is written as
+    * an int, the type a read infers from its directory names. */
+  private def writePartitioned(df: DataFrame, path: String,
+      partCols: String*): Unit = {
+    df.hint("rebalance", partCols.map(col): _*)
+      .write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
+    ParquetDir.keepSchemaIfEmpty(df.sparkSession, path, df.schema, partCols)
+  }
 
   /** All three tables resolved against ONE epoch read — per-table
     * loads each re-read the epoch, so a commit landing between them
@@ -268,9 +287,8 @@ object GraphStore {
   def loadSnapshot(spark: SparkSession, root: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val epoch = currentEpoch(spark, root)
-    def read(table: String) =
-      notExpired(spark.read.parquet(resolveWith(spark, epoch, root, table)))
-    (read("nodes"), read("edges"), read("indexes"))
+    (open(spark, epoch, root, "nodes"), open(spark, epoch, root, "edges"),
+      open(spark, epoch, root, "indexes"))
   }
 
   /** CONTRACT: a table is visible iff a reader can prove it complete
@@ -293,14 +311,19 @@ object GraphStore {
       fs.exists(new Path(dir, "_SUCCESS"))
   }
 
+  /** The table's version under `epoch`, opened on the driver. */
+  private def open(spark: SparkSession, epoch: Map[String, String],
+      root: String, table: String): DataFrame =
+    notExpired(ParquetDir.open(spark, resolveWith(spark, epoch, root, table)))
+
   def loadNodes(spark: SparkSession, root: String): DataFrame =
-    notExpired(spark.read.parquet(resolve(spark, root, "nodes")))
+    open(spark, currentEpoch(spark, root), root, "nodes")
 
   def loadEdges(spark: SparkSession, root: String): DataFrame =
-    notExpired(spark.read.parquet(resolve(spark, root, "edges")))
+    open(spark, currentEpoch(spark, root), root, "edges")
 
   def loadIndexes(spark: SparkSession, root: String): DataFrame =
-    notExpired(spark.read.parquet(resolve(spark, root, "indexes")))
+    open(spark, currentEpoch(spark, root), root, "indexes")
 
   /** Point lookup against the stored node partitioning: computes the
     * shard from the key so the scan prunes to one directory. */

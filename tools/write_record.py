@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Promote bench_last.json to bench_record.json (driver-side tooling).
 
-Run after a verified-quiet full-map bench (sentinel spread <= ~1.15).
+Run after a verified-quiet full-map bench (sentinel grade_spread, the
+cleanest per-pass bracket, <= ~1.15; artifacts older than grade_spread
+are gated on the overall sentinel spread).
 Writes the new record with the reset protocol tagged, and preserves
 the previous record's per-key map under a history key (the in-JVM
 record parser matches only the exact '"queries":{' prefix, so the
@@ -39,10 +41,13 @@ if "--compose" in sys.argv:
     spread = 0.0
 else:
     last = json.load(open("/root/repo/bench_last.json"))
-    spread = last.get("noise", {}).get("spread", -1)
-    quality = last.get("noise", {}).get("window_quality", "unknown")
+    # grade_spread is the gate when the artifact carries it; older
+    # artifacts only have the raw sentinel spread
+    noise = last.get("noise", {})
+    spread = noise.get("grade_spread", noise.get("spread", -1))
+    quality = noise.get("window_quality", "unknown")
     if spread > 1.15 and "--force" not in sys.argv:
-        sys.exit(f"refusing: sentinel spread {spread:.3f} > 1.15 "
+        sys.exit(f"refusing: sentinel grade spread {spread:.3f} > 1.15 "
                  f"(quality={quality}); rerun in a quieter window or --force")
 
 old = json.load(open("/root/repo/bench_record.json"))
